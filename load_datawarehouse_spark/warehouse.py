@@ -20,6 +20,7 @@ store prefix, and every data path is a plain distributed
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import json
 import os
 import shutil
@@ -27,14 +28,18 @@ import uuid
 from enum import Enum
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from load_datawarehouse_spark import types as wtypes
 from load_datawarehouse_spark.data import clean_dataframe_keys, prepare
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
+    WarehouseTableRowsInvalid,
 )
 from load_datawarehouse_spark.schema_infer import (
     infer_schema,
@@ -51,6 +56,16 @@ class QuerySort(Enum):
     DESCENDING = "DESC"
 
 
+#: quanta of NUMERIC / BIGNUMERIC (``DecimalType(38, 9)`` / ``(38, 18)``)
+_DECIMAL_QUANTUM = {
+    wtypes.NUMERIC: decimal.Decimal("1e-9"),
+    wtypes.BIGNUMERIC: decimal.Decimal("1e-18"),
+}
+#: wide enough for any 38-digit value; HALF_UP is how Spark rounds a
+#: Python Decimal into a DecimalType
+_DECIMAL_CONTEXT = decimal.Context(prec=76, rounding=decimal.ROUND_HALF_UP)
+
+
 def _conform_value(value: Any, field: dict) -> Any:
     """Coerce one record value to its condensed schema field — the
     role BigQuery's ingestion plays for the reference (server-side
@@ -59,13 +74,13 @@ def _conform_value(value: Any, field: dict) -> Any:
         return None
     ftype = field.get("type", wtypes.DEFAULT_TYPE)
     mode = field.get("mode", wtypes.DEFAULT_MODE)
-    if mode == wtypes.REPEATED:
-        if ftype == wtypes.RECORD:
+    if ftype == wtypes.RECORD:
+        sub = field.get("fields", [])
+        if mode == wtypes.REPEATED:
             items = value if isinstance(value, (list, tuple)) else [value]
-            sub = field.get("fields", [])
-            return [
-                _conform_record(v, sub) for v in items if isinstance(v, dict)
-            ]
+            return [_conform_record(v, sub) for v in items if isinstance(v, dict)]
+        return _conform_record(value, sub) if isinstance(value, dict) else value
+    if mode == wtypes.REPEATED:
         if isinstance(value, dict):  # plain-dict quirk: keys as strings
             items: Iterable[Any] = list(value.keys())
         elif isinstance(value, (list, tuple)):
@@ -88,14 +103,29 @@ def _conform_scalar(value: Any, ftype: str) -> Any:
     if ftype == wtypes.BOOLEAN:
         return bool(value)
     if ftype in (wtypes.DATETIME, wtypes.TIMESTAMP):
-        if isinstance(value, _dt.datetime):
-            return value
-        if isinstance(value, _dt.date):
-            return _dt.datetime(value.year, value.month, value.day)
+        if isinstance(value, _dt.date) and not isinstance(value, _dt.datetime):
+            value = _dt.datetime(value.year, value.month, value.day)
+        if ftype == wtypes.TIMESTAMP and isinstance(value, _dt.datetime):
+            return _utc_instant(value)
         return value
+    if ftype in _DECIMAL_QUANTUM and isinstance(value, decimal.Decimal) and value.is_finite():
+        # Arrow refuses digits beyond the scale; round them as Spark does
+        return value.quantize(_DECIMAL_QUANTUM[ftype], context=_DECIMAL_CONTEXT)
     if ftype == wtypes.TIME:
         return value.isoformat() if isinstance(value, _dt.time) else str(value)
     return value
+
+
+def _utc_instant(value: _dt.datetime) -> _dt.datetime:
+    """A TIMESTAMP value as a UTC-aware datetime.
+
+    A naive value means process-local time, as ``TimestampType`` has
+    always read it (``time.mktime``). Arrow reads a naive datetime as
+    UTC, and pyarrow 16 keeps an aware one's wall clock but drops its
+    offset, so only a UTC-aware value crosses unchanged."""
+    if type(value) is not _dt.datetime:  # pandas.Timestamp refuses naive astimezone
+        value = _dt.datetime.combine(value.date(), value.timetz())
+    return value.astimezone(_dt.timezone.utc)
 
 
 def _conform_record(record: dict, schema: list[dict]) -> dict:
@@ -103,6 +133,28 @@ def _conform_record(record: dict, schema: list[dict]) -> dict:
 
     cleaned = {clean_field_key(k): v for k, v in record.items()}
     return {f["name"]: _conform_value(cleaned.get(f["name"]), f) for f in schema}
+
+
+def _records_frame(
+    spark: SparkSession, rows: list[dict], struct: T.StructType, table: str
+) -> DataFrame:
+    """Conformed records as an Arrow local relation.
+
+    ``createDataFrame`` of a ``pyarrow.Table`` needs no session conf
+    and plans as a ``LocalTableScan`` with its real size (~44 KB for a
+    250-row change batch), so a join against the table broadcasts the
+    records instead of shuffling the table, and scanning them starts no
+    Python worker. A bad value (a float for NUMERIC, a str for
+    TIMESTAMP, a null in a REQUIRED field) raises
+    ``WarehouseTableRowsInvalid`` naming ``table``.
+    """
+    try:
+        batch = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+        return spark.createDataFrame(batch, struct)
+    # pa.ArrowInvalid, and the cast's error for a null in a non-nullable
+    # field, are ValueErrors; an int beyond int64 is an OverflowError
+    except (pa.ArrowTypeError, ValueError, OverflowError) as exc:
+        raise WarehouseTableRowsInvalid(f"rows rejected by table {table!r}: {exc}") from exc
 
 
 class SparkWarehouse:
@@ -270,11 +322,15 @@ class SparkWarehouse:
 
         Plan: one LEFT ANTI join drops every changed key (updates,
         deletes, and colliding inserts alike), then the I/U payload
-        rows union back in — a single key shuffle regardless of the
-        op mix, written via the same atomic temp-path swap as
-        ``update``. At scale, partition the table by key prefix so
-        the rewrite touches only affected partitions (or use a
-        lakehouse format whose MERGE does file-level pruning).
+        rows union back in, written via the same temp-path swap as
+        ``update``. A record batch is an Arrow local relation
+        (``_records_frame``) that the planner broadcasts into the
+        anti-join, so the table is scanned once and never shuffled.
+        The change keys are not deduplicated: a repeated key cannot
+        change an anti-join's result. A null key matches nothing, so it
+        deletes no table row. At scale, partition the table by key
+        prefix so the rewrite touches only affected partitions (or use
+        a lakehouse format whose MERGE does file-level pruning).
         """
         keys = list(keys)
         api = self.schema
@@ -295,29 +351,34 @@ class SparkWarehouse:
                 rows.append({**conformed, op_col: r.get(op_col, "U")})
             # StructType.add MUTATES the receiver — build a fresh copy
             # so the payload struct used below keeps only data fields
-            from pyspark.sql import types as _T
-
-            ch_struct = _T.StructType(list(struct.fields)).add(op_col, "string")
-            ch = self.spark.createDataFrame(rows, ch_struct)
+            ch_struct = T.StructType(list(struct.fields)).add(op_col, "string")
+            ch = _records_frame(self.spark, rows, ch_struct, self.table)
         upserts = ch.filter(F.col(op_col).isin("I", "U")).select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in struct.fields]
         )
-        changed_keys = ch.select(*keys).distinct()
         merged = (
             self.df()
-            .join(changed_keys, on=keys, how="left_anti")
+            .join(ch.select(*keys), on=keys, how="left_anti")
             .unionByName(upserts)
         )
+        self._replace_data(merged, "merge")
+        return True
+
+    def _replace_data(self, df: DataFrame, verb: str) -> None:
+        """Write ``df`` to a temp directory beside ``data/``, then swap
+        it in with two renames and drop the old files. Single-writer
+        (SURVEY.md §7.5): a crash between the renames leaves no
+        ``data/``, and a DataFrame read from the old files before the
+        swap fails after it."""
         data_path = os.path.join(self.path, "data")
-        tmp_path = os.path.join(self.path, f".tmp_merge_{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(tmp_path)
+        tmp_path = os.path.join(self.path, f".tmp_{verb}_{uuid.uuid4().hex}")
+        df.write.mode("overwrite").parquet(tmp_path)
         old_path = os.path.join(self.path, f".old_{uuid.uuid4().hex}")
         if os.path.isdir(data_path):
             os.replace(data_path, old_path)
         os.replace(tmp_path, data_path)
         if os.path.isdir(old_path):
             shutil.rmtree(old_path)
-        return True
 
     # -- snapshots / time travel -------------------------------------------
 
@@ -434,17 +495,19 @@ class SparkWarehouse:
         boundary replaces the HTTP boundary, and parquet row-groups
         replace 20 MiB JSON chunks.
 
-        ``data`` may also be a Spark DataFrame (VERDICT r14 #5): that
-        is the BULK path — no records round-trip, no driver
-        materialization. Key sanitation runs as a zero-copy projection
+        Records become an Arrow local relation (``_records_frame``);
+        a bad value raises ``WarehouseTableRowsInvalid``.
+
+        ``data`` may also be a Spark DataFrame: that is the BULK path —
+        no records round-trip, no driver materialization. Key
+        sanitation runs as a zero-copy projection
         (``clean_dataframe_keys``), the infer/merge stage runs
         distributed (``infer_schema_distributed``: per-partition
         observation + treeAggregate), and the append is a straight
-        ``df.write`` — every stage scales with the cluster, closing
-        the verb-decade finding that the record path's collect slope
-        (6.02) is driver-bound by contract. Semantics are identical to
-        the records path: adopt-existing-schema, existing-wins field
-        merge, widen-only stable-order append.
+        ``df.write``, so every stage scales with the cluster, while the
+        record path is driver-bound by contract. Semantics are
+        identical to the records path: adopt-existing-schema,
+        existing-wins field merge, widen-only stable-order append.
         """
         if isinstance(data, DataFrame):
             src = clean_dataframe_keys(data)
@@ -460,16 +523,14 @@ class SparkWarehouse:
             have = {f.name: f.dataType for f in src.schema.fields}
 
             def _conform_expr(col, src_type, dst_type):
-                """Recursive per-field conform (ADVICE r15 #1): a
-                whole-struct ``cast`` fails with an AnalysisException
-                when the batch's struct misses (or adds) nested fields
+                """Recursive per-field conform: a whole-struct
+                ``cast`` fails with an AnalysisException when the
+                batch's struct misses (or adds) nested fields
                 relative to the table schema, while the record path's
                 ``_conform_record`` backfills missing nested fields
                 with NULL and drops extras. Build struct columns
                 field-by-field so the two load paths evolve nested
                 schemas identically."""
-                from pyspark.sql import types as T
-
                 if src_type is None:
                     return F.lit(None).cast(dst_type)
                 if isinstance(dst_type, T.StructType):
@@ -531,7 +592,7 @@ class SparkWarehouse:
             conformed = [
                 _conform_record(r, api) for r in records if isinstance(r, dict)
             ]
-            df = self.spark.createDataFrame(conformed, struct)
+            df = _records_frame(self.spark, conformed, struct, self.table)
         if not self.exists():
             self._write_meta(
                 {"schema": api, "expires": None,
@@ -596,11 +657,11 @@ class SparkWarehouse:
         on ``keys``.
 
         Plan: existing LEFT ANTI JOIN new (drop rows being replaced)
-        UNION new, written to a temp path then atomically swapped —
-        single-writer assumption documented (SURVEY.md §7.5). The
-        anti-join shuffles once on the key; at scale, partition the
-        table by the key prefix so the rewrite touches only affected
-        partitions.
+        UNION new, written to a temp path then swapped in
+        (``_replace_data``). Records become an Arrow local relation
+        (``_records_frame``) that is broadcast into the anti-join, so
+        the table is not shuffled. At scale, partition the table by the
+        key prefix so the rewrite touches only affected partitions.
         """
         keys = list(keys)
         api = self.schema
@@ -617,19 +678,12 @@ class SparkWarehouse:
             )
         else:
             records = prepare(data)
-            new_df = self.spark.createDataFrame(
-                [_conform_record(r, api) for r in records if isinstance(r, dict)], struct
+            new_df = _records_frame(
+                self.spark,
+                [_conform_record(r, api) for r in records if isinstance(r, dict)],
+                struct,
+                self.table,
             )
-        existing_df = self.df()
-        merged = existing_df.join(new_df, on=keys, how="left_anti").unionByName(new_df)
-
-        data_path = os.path.join(self.path, "data")
-        tmp_path = os.path.join(self.path, f".tmp_update_{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(tmp_path)
-        old_path = os.path.join(self.path, f".old_{uuid.uuid4().hex}")
-        if os.path.isdir(data_path):
-            os.replace(data_path, old_path)
-        os.replace(tmp_path, data_path)
-        if os.path.isdir(old_path):
-            shutil.rmtree(old_path)
+        merged = self.df().join(new_df, on=keys, how="left_anti").unionByName(new_df)
+        self._replace_data(merged, "update")
         return True

@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
+    WarehouseTableRowsInvalid,
 )
 from load_datawarehouse_spark.warehouse import QuerySort, SparkWarehouse
 
@@ -34,12 +37,23 @@ def test_get_missing_raises(spark, root):
 def test_create_load_fetch_query(spark, root):
     wh = SparkWarehouse.new(spark, root, "t1")
     assert wh.exists()
-    assert wh.load(RECORDS) is True
+    records = [
+        {**r, "day": dt.date(2020, 1, r["id"]), "blob": bytes([r["id"], 0])}
+        for r in RECORDS
+    ]
+    # inference reads a date as DATETIME; a declared DATE field wins
+    day = [{"name": "day", "type": "DATE", "mode": "NULLABLE"}]
+    assert wh.load(records, schema=day) is True
     # inferred schema recorded in metadata
     types = {f["name"]: (f["type"], f["mode"]) for f in wh.schema}
     assert types["id"] == ("INTEGER", "NULLABLE")
     assert types["score"] == ("FLOAT", "NULLABLE")
     assert types["tags"] == ("STRING", "REPEATED")
+    assert types["day"] == ("DATE", "NULLABLE")
+    assert types["blob"] == ("BYTES", "NULLABLE")
+    rows = {r["id"]: r for r in wh.df().collect()}
+    assert rows[2]["day"] == dt.date(2020, 1, 2)
+    assert bytes(rows[3]["blob"]) == b"\x03\x00"
 
     got = wh.fetch(fields=["id", "name"], sort=[("id", QuerySort.DESCENDING)], count=2).collect()
     assert [r["id"] for r in got] == [3, 2]
@@ -394,3 +408,213 @@ def test_load_dataframe_cleans_keys_like_records_path(spark, root):
     b = SparkWarehouse.new(spark, root, "kd")
     b.load(df)
     assert [f["name"] for f in b.schema] == [f["name"] for f in a.schema]
+
+
+# --- record batches as Arrow local relations -------------------------------
+
+
+def _merge_model(table_rows, batch, key="id"):
+    """What ``merge`` commits: every table row whose key no change names
+    (a null key matches nothing), then every I/U change row as given."""
+    changed = {c[key] for c in batch if c[key] is not None}
+    kept = [r for r in table_rows if r[key] is None or r[key] not in changed]
+    upserts = [
+        {k: v for k, v in c.items() if k != "op"}
+        for c in batch
+        if c.get("op", "U") in ("I", "U")
+    ]
+    return kept + upserts
+
+
+def _multiset(rows):
+    return sorted((r["id"] is None, r["id"] or 0, r["v"]) for r in rows)
+
+
+_BASE = [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}, {"id": 3, "v": "c"}]
+
+
+@pytest.mark.parametrize(
+    "table_rows, batch",
+    [
+        pytest.param(_BASE, [{"id": 2, "v": "B", "op": "U"}, {"id": 2, "v": None, "op": "D"}], id="u-then-d"),
+        pytest.param(_BASE, [{"id": 2, "v": "B1", "op": "U"}, {"id": 2, "v": "B2", "op": "U"}], id="two-u"),
+        pytest.param(
+            _BASE + [{"id": None, "v": "null-key"}],
+            [{"id": 1, "v": "A", "op": "U"}],
+            id="null-key-in-table",
+        ),
+        pytest.param(
+            _BASE + [{"id": None, "v": "null-key"}],
+            [{"id": None, "v": "n", "op": "U"}, {"id": None, "v": None, "op": "D"}, {"id": 3, "v": None, "op": "D"}],
+            id="null-key-in-batch",
+        ),
+        pytest.param(_BASE, [], id="empty-batch"),
+        pytest.param(_BASE, [{"id": k, "v": None, "op": "D"} for k in (1, 3, 9)], id="all-d"),
+    ],
+)
+def test_merge_matches_model(spark, tmp_path, table_rows, batch):
+    schema = [
+        {"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+        {"name": "v", "type": "STRING", "mode": "NULLABLE"},
+    ]
+    wh = SparkWarehouse.new(spark, str(tmp_path), "mm", data=table_rows, schema=schema)
+    assert wh.merge(batch, keys=["id"]) is True
+    got = [r.asDict() for r in wh.df().collect()]
+    assert _multiset(got) == _multiset(_merge_model(table_rows, batch))
+
+
+def test_merge_dataframe_change_set_matches_model(spark, tmp_path):
+    batch = [
+        {"id": 2, "v": "B1", "op": "U"},
+        {"id": 2, "v": "B2", "op": "U"},
+        {"id": 3, "v": None, "op": "D"},
+        {"id": None, "v": "n", "op": "I"},
+        {"id": 4, "v": "d", "op": "I"},
+    ]
+    wh = SparkWarehouse.new(spark, str(tmp_path), "mdf", data=_BASE)
+    changes = spark.createDataFrame(
+        [(c["id"], c["v"], c["op"]) for c in batch], "id long, v string, op string"
+    )
+    wh.merge(changes, keys=["id"])
+    got = [r.asDict() for r in wh.df().collect()]
+    assert _multiset(got) == _multiset(_merge_model(_BASE, batch))
+
+
+def test_record_timestamps_match_row_path_in_local_zone(spark):
+    """A naive TIMESTAMP value is process-local time, as ``TimestampType``
+    reads it on the row path (``time.mktime``); Arrow would read it as
+    UTC. Conformed records must land the same instants as the row path,
+    at top level, in a RECORD and in a REPEATED RECORD, for naive and
+    aware values; a naive ``pandas.Timestamp`` lands as its datetime."""
+    import os
+    import time
+
+    import pandas as pd
+
+    from load_datawarehouse_spark import types as wtypes
+    from load_datawarehouse_spark.warehouse import _conform_record, _records_frame
+
+    api = [
+        {"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+        {"name": "ts", "type": "TIMESTAMP", "mode": "NULLABLE"},
+        {"name": "ntz", "type": "DATETIME", "mode": "NULLABLE"},
+        {"name": "rec", "type": "RECORD", "mode": "NULLABLE", "fields": [
+            {"name": "ts", "type": "TIMESTAMP", "mode": "NULLABLE"},
+        ]},
+        {"name": "recs", "type": "RECORD", "mode": "REPEATED", "fields": [
+            {"name": "ts", "type": "TIMESTAMP", "mode": "NULLABLE"},
+        ]},
+    ]
+    struct = wtypes.api_repr_to_struct_type(api)
+    naive = dt.datetime(2021, 7, 1, 12, 0, 0, 123456)
+    aware = dt.datetime(2021, 1, 15, 9, 30, tzinfo=dt.timezone(dt.timedelta(hours=5)))
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        raw = [
+            {"id": 1, "ts": naive, "ntz": naive, "rec": {"ts": naive}, "recs": [{"ts": naive}]},
+            {"id": 2, "ts": aware, "ntz": naive, "rec": {"ts": aware}, "recs": [{"ts": aware}, {"ts": None}]},
+            {"id": 3, "ts": None, "ntz": None, "rec": None, "recs": None},
+        ]
+        # a pandas frame's datetime column arrives as pandas.Timestamp,
+        # which the row path refuses
+        from_pandas = {"id": 4, "ts": pd.Timestamp(naive), "ntz": None, "rec": None, "recs": None}
+        row_path = spark.createDataFrame(raw, struct)
+        conformed = [_conform_record(r, api) for r in raw + [from_pandas]]
+        arrow = _records_frame(spark, conformed, struct, "tz")
+        assert arrow.filter("id < 4").orderBy("id").collect() == row_path.orderBy("id").collect()
+        epochs = {
+            r["id"]: (r["ts"], r["rec_ts"], r["recs_ts"])
+            for r in arrow.select(
+                "id",
+                F.col("ts").cast("long").alias("ts"),
+                F.col("rec.ts").cast("long").alias("rec_ts"),
+                F.col("recs")[0]["ts"].cast("long").alias("recs_ts"),
+            ).collect()
+        }
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    # 12:00 EDT is 16:00 UTC; 09:30+05:00 is 04:30 UTC
+    assert epochs[1] == (1625155200,) * 3
+    assert epochs[2] == (1610685000,) * 3
+    assert epochs[3] == (None, None, None)
+    assert epochs[4] == (1625155200, None, None)
+
+
+_TYPED = [
+    {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+    {"name": "amount", "type": "NUMERIC", "mode": "NULLABLE"},
+    {"name": "ts", "type": "TIMESTAMP", "mode": "NULLABLE"},
+]
+
+
+@pytest.mark.parametrize("verb", ["load", "merge", "update"])
+@pytest.mark.parametrize(
+    "bad, cause",
+    [
+        pytest.param({"amount": 1.5}, pa.ArrowTypeError, id="float-numeric"),
+        pytest.param({"ts": "2020-01-01 00:00:00"}, pa.ArrowTypeError, id="str-timestamp"),
+        pytest.param({"id": None}, ValueError, id="null-required"),
+        pytest.param({"id": 2**64}, OverflowError, id="int-overflow"),
+    ],
+)
+def test_bad_record_value_raises_rows_invalid(spark, tmp_path, verb, bad, cause):
+    import decimal
+
+    wh = SparkWarehouse.new(
+        spark, str(tmp_path), "typed",
+        data=[{"id": 1, "amount": decimal.Decimal("2.5"), "ts": dt.datetime(2020, 1, 1)}],
+        schema=_TYPED,
+    )
+    row = {"id": 2, **bad}
+    call = {
+        "load": lambda: wh.load([row]),
+        "merge": lambda: wh.merge([{**row, "op": "U"}], keys=["id"]),
+        "update": lambda: wh.update([row], keys=["id"]),
+    }[verb]
+    with pytest.raises(WarehouseTableRowsInvalid, match="'typed'") as err:
+        call()
+    assert isinstance(err.value.__cause__, cause)
+    assert wh.df().count() == 1
+
+
+def test_numeric_rounds_like_row_path(spark):
+    import decimal
+
+    from load_datawarehouse_spark import types as wtypes
+    from load_datawarehouse_spark.warehouse import _conform_record, _records_frame
+
+    api = [{"name": "n", "type": "NUMERIC", "mode": "NULLABLE"}]
+    struct = wtypes.api_repr_to_struct_type(api)
+    raw = [{"n": decimal.Decimal(v)} for v in ("1.1234567895", "-1.1234567885", "2", "1e28")]
+    arrow = _records_frame(spark, [_conform_record(r, api) for r in raw], struct, "n")
+    assert arrow.collect() == spark.createDataFrame(raw, struct).collect()
+
+
+def test_record_merge_broadcasts_change_set_without_shuffle(spark, tmp_path):
+    """Counter lock on the merge plan: the record batch is a local
+    relation broadcast into the anti-join, so no stage writes shuffle
+    bytes, and the merge runs at most two jobs (broadcast and write)."""
+    sc = spark.sparkContext
+    wh = SparkWarehouse.new(
+        spark, str(tmp_path), "lock",
+        data=[{"id": k, "v": str(k)} for k in range(200)],
+    )
+    batch = [{"id": 5, "v": "five", "op": "U"}, {"id": 7, "op": "D"}, {"id": 500, "v": "new", "op": "I"}]
+    scheduler = sc._jsc.sc().dagScheduler()
+    lo = scheduler.numTotalJobs()
+    wh.merge(batch, keys=["id"])
+    hi = scheduler.numTotalJobs()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = [tracker.getJobInfo(j) for j in range(lo, hi)]
+    assert 1 <= len(jobs) <= 2
+    stage_ids = [s for job in jobs for s in job.stageIds]
+    assert stage_ids
+    assert [int(store.lastStageAttempt(s).shuffleWriteBytes()) for s in stage_ids] == [0] * len(stage_ids)
+    assert wh.df().count() == 200
